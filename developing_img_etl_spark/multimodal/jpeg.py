@@ -24,8 +24,14 @@ quantization), standard Annex K Huffman tables, quality via the IJG
 scaling curve — deterministic bytes for fixed pixels, so encoded
 output is stable across runs/partitions.
 
-Entropy coding is per-symbol Python over a peek-16 LUT (decode) and a
-dict-coded bit writer (encode); DCT/IDCT, color transforms, sampling
+Entropy decoding of photo-sized scans is a lock-step numpy walk:
+the scan is cut into bit lanes that all decode at once and
+resynchronize (see _walk_lockstep); small scans, and scans that do not
+synchronize, take the per-symbol Python walk over a peek-16 LUT, which
+is also the parity oracle the lock-step walk is tested against. The
+entropy coder builds every codeword in stream order with numpy and
+packs them into words; the per-symbol _emit_block/_BitWriter path is
+kept as its byte-parity oracle. DCT/IDCT, color transforms, sampling
 and quantization are vectorized numpy over all blocks at once. In the
 engine this runs inside Arrow-batched pandas UDFs (mapInPandas), so
 the per-image cost parallelizes across executors exactly like the
@@ -34,6 +40,7 @@ real libjpeg path a deployment would plug into the same seam.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -137,7 +144,12 @@ _AC_CHROMA = (
 # grids (4 B) + float64 plane (8 B) per component ≈ 36 B/pixel for
 # 4:4:4 color vs PNG's ~4 B — 24 MP bounds the decode at ~0.9 GB while
 # still covering any sane photo corpus (the IDCT temporaries are
-# chunk-bounded separately, see _decode_scan).
+# chunk-bounded separately, see _decode_scan). Before that, the
+# lock-step entropy walk holds ~70 B of scratch per scan byte (8 B of
+# bit windows, a 1-2 B state stamp per bit, 13 B per recorded symbol at
+# ~1.3 symbols per byte, then the joined records and triplets; measured
+# 64-87 B on 0.12-1.7 MB photo scans) and lays out at most _UNIT_BYTES
+# of scan per data unit; it is freed before the pixel planes exist.
 _MAX_PIXELS = 24_000_000
 
 # orthonormal DCT-II basis: _DCT_M[u, x] = a(u) cos((2x+1)uπ/16)
@@ -228,37 +240,50 @@ def jpeg_dims(data: bytes) -> tuple[int, int] | None:
 # --------------------------------------------------------------------------
 # Decoder
 # --------------------------------------------------------------------------
-def _extend(v: int, s: int) -> int:
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-def _split_scan(data: bytes, start: int) -> tuple[list[bytes], int] | None:
+def _split_scan(data: bytes, start: int) -> tuple[list[bytes], int]:
     """Destuff the entropy-coded scan from ``start``; split at RST
-    markers. Returns (segments, pos_after_scan)."""
-    segs: list[bytes] = []
-    cur = bytearray()
-    i = start
-    n = len(data)
-    while i < n:
-        b = data[i]
-        if b != 0xFF:
-            cur.append(b)
-            i += 1
-            continue
-        if i + 1 >= n:
-            break
-        m = data[i + 1]
-        if m == 0x00:
-            cur.append(0xFF)
-            i += 2
-        elif 0xD0 <= m <= 0xD7:
-            segs.append(bytes(cur))
-            cur = bytearray()
-            i += 2
-        else:  # real marker: end of scan
-            break
-    segs.append(bytes(cur))
-    return segs, i
+    markers. Returns (segments, pos_after_scan): the offset of the
+    marker, 0xFF fill or trailing lone 0xFF that ends the scan, else
+    len(data)."""
+    arr = np.frombuffer(data, dtype=np.uint8)[start:]
+    ff = np.flatnonzero(arr == 0xFF)
+    # Every 0xFF before the scan's end opens a pair: a stuffed 0xFF00
+    # or an RSTn. The first other pair, or a lone 0xFF as the last
+    # byte (it reads itself as its second byte), ends the scan.
+    nxt = arr[np.minimum(ff + 1, len(arr) - 1)]
+    stuffed = nxt == 0x00
+    stop = np.flatnonzero(~stuffed & ((nxt < 0xD0) | (nxt > 0xD7)))
+    k = int(stop[0]) if len(stop) else len(ff)
+    end = int(ff[k]) if k < len(ff) else len(arr)
+    if not k:
+        return [arr[:end].tobytes()], start + end
+    ff, stuffed = ff[:k], stuffed[:k]
+    keep = np.ones(end, dtype=bool)
+    keep[ff + 1] = False
+    marks = ff[~stuffed]
+    keep[marks] = False
+    # an RSTn's offset in the destuffed bytes: one byte is dropped per
+    # stuffed pair before it and two per RSTn
+    width = np.where(stuffed, 1, 2)
+    cuts = marks - (np.cumsum(width) - width)[~stuffed]
+    return [s.tobytes() for s in np.split(arr[:end][keep], cuts)], start + end
+
+
+class _Huffman:
+    """One DHT table, built once per distinct spec (see _huffman)."""
+
+    __slots__ = ("lut", "peek", "max_sym")
+
+    def __init__(self, bits: bytes, vals: bytes):
+        self.lut = _decode_lut(list(bits), list(vals))
+        self.lut.flags.writeable = False  # shared through the cache
+        self.peek = memoryview(self.lut)  # the scalar walk's lookups
+        self.max_sym = int(self.lut.max()) >> 5
+
+
+@functools.lru_cache(maxsize=16)  # 256 KB each
+def _huffman(bits: bytes, vals: bytes) -> _Huffman:
+    return _Huffman(bits, vals)
 
 
 def jpeg_decode(data: bytes) -> np.ndarray | None:
@@ -274,7 +299,7 @@ def _decode_inner(data: bytes) -> np.ndarray | None:
     if len(data) < 4 or data[0:2] != b"\xff\xd8":
         return None
     qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], np.ndarray] = {}
+    huff: dict[tuple[int, int], _Huffman] = {}
     frame = None  # (w, h, comps) with comps = [(cid, hi, vi, tq)]
     restart = 0
     i = 2
@@ -304,12 +329,12 @@ def _decode_inner(data: bytes) -> np.ndarray | None:
             p = 0
             while p + 17 <= len(seg):
                 tc, th = seg[p] >> 4, seg[p] & 15
-                bits = list(seg[p + 1 : p + 17])
+                bits = seg[p + 1 : p + 17]
                 nv = sum(bits)
-                vals = list(seg[p + 17 : p + 17 + nv])
+                vals = seg[p + 17 : p + 17 + nv]
                 if len(vals) < nv:
                     return None
-                huff[(tc, th)] = _decode_lut(bits, vals)
+                huff[(tc, th)] = _huffman(bits, vals)
                 p += 17 + nv
         elif marker == 0xC0 or marker == 0xC1:  # baseline / ext sequential
             prec = seg[0]
@@ -348,6 +373,409 @@ def _decode_inner(data: bytes) -> np.ndarray | None:
     return None
 
 
+# --------------------------------------------------------------------------
+# Entropy decoding
+# --------------------------------------------------------------------------
+# A scan decodes into (blk, kz, val) triplets: blk is the data unit's
+# ordinal in scan order (MCU * units per MCU + unit), kz the zigzag index
+# of the coefficient and val its value — for kz = 0 the DC difference
+# to the previous unit of the same component.
+#
+# The lock-step walk (Weißenberger & Schmidt's self-synchronizing
+# Huffman decoding, on numpy) splits every restart segment into lanes
+# of a fixed number of bits and decodes all lanes at once, one symbol
+# per lane per step. A lane's state between two symbols is
+# q = unit * 64 + k (k: zigzag index of the unit's next coefficient, 0
+# when its DC symbol is next). A segment's first lane enters at its
+# first bit in state 0; every other lane starts from a guess — its first
+# bit, state 0 — and then enters where its predecessor left, round
+# after round (Jacobi), until no entry changes. Huffman codes
+# resynchronize within a few symbols and the unit/k state within a few
+# data units, so a re-decoded lane soon reaches a state its first
+# trajectory passed through at the same bit; from there on both
+# trajectories coincide, so it stops and keeps the first trajectory's
+# exit and symbols.
+_LANE_BAD = 1024  # lane states from here on: an invalid code was met
+_ERR_DC, _ERR_AC = _LANE_BAD, _LANE_BAD + 1  # ... on a DC / an AC symbol
+_ZRL, _EOB, _BAD = 17, 18, 19  # symbol classes, see _packed_lut
+_UNIT_BYTES = 268  # >= 69 * 31 bits, see _walk_lockstep
+_UNSYNCED = object()  # _walk_lockstep: let the scalar walk decide
+# Jacobi rounds after which a scan counts as not synchronizing and is
+# decoded by the scalar walk; measured photo scans need 2-6 at q50-q95
+# and 12-14 at q100.
+_MAX_ROUNDS = 16
+# Below this many scan bytes the scalar walk is faster: the lock-step
+# walk's fixed cost (~30 numpy calls per step, hundreds of steps)
+# dominates (measured crossover ~10 KB).
+_LOCKSTEP_MIN_BYTES = 12288
+
+
+def _entropy_decode(segs, need, seg_base, unit_tabs):
+    """Decode ``need[i]`` data units from each restart segment
+    ``segs[i]``; units are numbered from ``seg_base[i]``. unit_tabs: the
+    (DC, AC) _Huffman tables of each data unit of the MCU. Returns
+    (blk, kz, val) or None on a corrupt stream."""
+    # DC categories above 15 do not occur in 8-bit baseline; they would
+    # not fit the walk's int16 values.
+    if sum(len(s) for s in segs) >= _LOCKSTEP_MIN_BYTES and all(
+        dc.max_sym <= 15 for dc, _ in unit_tabs
+    ):
+        res = _walk_lockstep(segs, need, seg_base, unit_tabs)
+        if res is not _UNSYNCED:
+            return res
+    return _walk_scalar(segs, need, seg_base, [(dc.peek, ac.peek) for dc, ac in unit_tabs])
+
+
+def _packed_lut(lut: np.ndarray, dc: bool) -> np.ndarray:
+    """A peek-16 LUT as the lock-step walk reads it: prefix16 -> class
+    | adv << 5 | mask << 11, where adv is the code length plus the value
+    bits, mask covers the value bits, and class is 0 for a DC symbol,
+    1 + run for an AC symbol with a value, _ZRL, _EOB (EOB and every
+    other run/0 symbol: the scalar walk ends the block on them) or _BAD
+    (no code)."""
+    t = np.maximum(lut, 0).astype(np.intp)
+    sym = t >> 5
+    if dc:
+        s, cls = sym, np.zeros_like(t)
+    else:
+        r, s = sym >> 4, sym & 15
+        cls = np.where(s > 0, r + 1, np.where(r == 15, _ZRL, _EOB))
+    return np.where(lut < 0, _BAD, cls | (((t & 31) + s) << 5) | (((1 << s) - 1) << 11))
+
+
+@functools.lru_cache(maxsize=4)  # 0.5 MB per distinct Huffman table
+def _lane_tables(unit_tabs: tuple) -> tuple[np.ndarray, ...]:
+    """(lut, tab, nxt, emit) for the lock-step walk over MCUs whose data
+    units decode with ``unit_tabs`` (DC, AC) _Huffman tables: ``lut``
+    holds the packed LUTs one after another and ``tab[q]`` the offset of
+    the one state q decodes with; ``nxt[q << 5 | class]`` is the state
+    after a symbol of that class and ``emit[q << 5 | class]`` the zigzag
+    index of the coefficient it carries (-1: none). Cached: an encoder
+    writes the same tables into every file."""
+    n_unit = len(unit_tabs)
+    luts: list[tuple[_Huffman, bool]] = []
+    tab = np.empty((n_unit, 64), dtype=np.intp)
+    for u, (dc, ac) in enumerate(unit_tabs):
+        for col, key in ((slice(0, 1), (dc, True)), (slice(1, 64), (ac, False))):
+            if key not in luts:
+                luts.append(key)
+            tab[u, col] = luts.index(key) << 16
+    q = np.arange(n_unit * 64, dtype=np.intp)[:, None]
+    cls = np.arange(32, dtype=np.intp)[None, :]
+    u, k = q >> 6, q & 63
+    after = k + cls  # next k after a coefficient at k + cls - 1
+    nxt_unit = (u + 1) % n_unit * 64
+    valued = (cls >= 1) & (cls <= 16)
+    nxt = np.select(
+        [cls == 0, valued & (after < 64), valued & (after == 64), valued,
+         (cls == _ZRL) & (k + 16 < 64), (cls == _ZRL) | (cls == _EOB),
+         (cls == _BAD) & (k == 0)],
+        [q + 1, q + cls, nxt_unit, _ERR_AC, q + 16, nxt_unit, _ERR_DC],
+        _ERR_AC,
+    )
+    emit = np.select(
+        [cls == 0, valued & (after <= 64)], [np.zeros_like(after), after - 1], -1
+    ).astype(np.int8)
+    out = (
+        np.concatenate([_packed_lut(t.lut, dc) for t, dc in luts]),
+        tab.ravel(), nxt.ravel(), emit.ravel(),
+    )
+    for a in out:
+        a.flags.writeable = False
+    return out
+
+
+def _windows(buf: bytes) -> np.ndarray:
+    """w[i] = buf[i : i + 8] as a big-endian int64 bit window."""
+    n = len(buf) - 7
+    w = np.empty(n, dtype=np.int64)
+    for j in range(8):
+        w[j::8] = np.frombuffer(buf, dtype=">i8", count=len(range(j, n, 8)), offset=j)
+    return w
+
+
+def _lanes(win, tables, p, q, end, stamp=None, merge=None, record=None):
+    """Decode lanes in lock-step, lane i from bit p[i] in state q[i],
+    until its bit position reaches end[i] or it meets an invalid code.
+
+    stamp: write each symbol's starting state at its bit position.
+    merge: stop a lane as soon as its state equals merge[p] (it has
+        joined the trajectory stamped there).
+    record: a list to append one (lane, p, dcs, kz, val) tuple per step
+        to: the symbol's bit position, the lane's DC symbols so far
+        (this one included), the zigzag index of the coefficient it
+        carries (-1: none) and its value.
+
+    Returns the lanes' exit (or joining) positions and states, their DC
+    symbol counts, and which lanes joined. The lane state is intp (numpy
+    converts narrower indices on every gather); records are narrowed to
+    13 bytes per symbol."""
+    lut, tab, nxt, emit = tables
+    n = len(p)
+    xp, xq = p.copy(), q.copy()
+    xdc = np.zeros(n, dtype=np.int16)  # a lane holds < 2^15 data units
+    joined = np.zeros(n, dtype=bool)
+    ids = np.arange(n)
+    dcs = xdc.copy()
+    while len(ids):
+        done = (p >= end) | (q >= _LANE_BAD)
+        if merge is not None:
+            hit = merge.take(p) == q
+            hit &= ~done
+            joined[ids.compress(hit)] = True
+            done |= hit
+        if done.any():
+            d = ids.compress(done)
+            xp[d], xq[d], xdc[d] = p.compress(done), q.compress(done), dcs.compress(done)
+            go = ~done
+            ids, p, q, end, dcs = (a.compress(go) for a in (ids, p, q, end, dcs))
+            if not len(ids):
+                break
+        if stamp is not None:
+            stamp[p] = q
+        w = win.take(p >> 3) << (p & 7)
+        e = lut.take(((w >> 48) & 0xFFFF) | tab.take(q))
+        q1 = (q << 5) | (e & 31)
+        adv = (e >> 5) & 63
+        if record is not None:
+            mask = e >> 11
+            raw = (w >> (64 - adv)) & mask
+            kz = emit.take(q1)
+            dcs = dcs + (kz == 0)
+            val = raw - (raw <= (mask >> 1)) * mask
+            record.append(
+                (ids.astype(np.int32), p.astype(np.int32), dcs, kz, val.astype(np.int16))
+            )
+        p = p + adv
+        q = nxt.take(q1)
+    return xp, xq, xdc, joined
+
+
+def _walk_lockstep(segs, need, seg_base, unit_tabs):
+    """The lock-step walk: (blk, kz, val) as _walk_scalar returns it,
+    None on a corrupt stream, or _UNSYNCED when the scalar walk must
+    decide (no synchronization, or a segment's end was reached before
+    its data units)."""
+    tables = _lane_tables(tuple(unit_tabs))
+    # A data unit is at most 69 symbols of at most 31 bits, so neither
+    # walk reads (or peeks 16 bits) past _UNIT_BYTES per unit plus 8:
+    # bytes beyond are not laid out. Segments are laid out one after
+    # another, each followed by 16 bytes of 0xFF: reading past its end
+    # yields 1-bits, as in the scalar walk.
+    segs = [s[: n * _UNIT_BYTES + 8] for s, n in zip(segs, need.tolist())]
+    nbytes = np.array([len(s) for s in segs], dtype=np.intp)
+    seg_off = 8 * np.concatenate(([0], np.cumsum(nbytes + 16)[:-1]))
+    total = int(seg_off[-1] + 8 * (nbytes[-1] + 16))
+    if total >= 1 << 31:  # records hold bit positions as int32
+        return _UNSYNCED
+    lane_bits = _lane_bits(8 * int(nbytes.sum()), int(need.sum()))
+    n_lane = np.maximum(1, -(-8 * nbytes // lane_bits))
+    lane_seg = np.repeat(np.arange(len(segs)), n_lane)
+    first = np.concatenate(([0], np.cumsum(n_lane)[:-1]))
+    last = first + n_lane - 1
+    n = len(lane_seg)
+    start = seg_off[lane_seg] + (np.arange(n) - first[lane_seg]) * lane_bits
+    end = start + lane_bits
+    end[last] = seg_off + 8 * nbytes + 64
+    win = _windows(b"".join(s + b"\xff" * 16 for s in segs) + b"\xff" * 8)
+    # one state per bit; the dtype's maximum is no state
+    dt = np.dtype(np.uint8 if len(unit_tabs) <= 3 else np.int16)
+    stamp = np.full(total, np.iinfo(dt).max, dtype=dt)
+
+    # Round 0 decodes every lane from its guess, stamping and recording
+    # its trajectory. Each later round re-decodes the lanes whose entry
+    # changed, recording until they join their round-0 trajectory; the
+    # last decode of a lane is from its final, exact entry. Per lane:
+    # that round, where it joined (never: past every bit), its DC
+    # symbols until then, and its exit.
+    recs: list[tuple[np.ndarray, list]] = [(np.arange(n), [])]
+    x0p, x0q, n0, _ = _lanes(win, tables, start, np.zeros(n, np.intp), end,
+                             stamp=stamp, record=recs[0][1])
+    ep, eq = start.copy(), np.zeros(n, dtype=np.intp)
+    xp, xq = x0p.copy(), x0q.copy()
+    last_round = np.zeros(n, dtype=np.intp)
+    join = start.copy()
+    ndc = np.zeros(n, dtype=np.intp)
+    follows = np.ones(n, dtype=bool)
+    follows[first] = False
+    follows = follows[1:]
+    for rnd in range(1, _MAX_ROUNDS + 1):
+        # a lane behind an invalid code keeps its entry: that exit has
+        # no position, and if it is on the true path the scan is corrupt
+        take = follows & (xq[:-1] < _LANE_BAD)
+        tp = np.where(take, xp[:-1], ep[1:])
+        tq = np.where(take, xq[:-1], eq[1:])
+        ch = np.flatnonzero((tp != ep[1:]) | (tq != eq[1:]))
+        if not len(ch):
+            break
+        lanes = ch + 1
+        ep[lanes], eq[lanes] = tp[ch], tq[ch]
+        recs.append((lanes, []))
+        mp, mq, mdc, hit = _lanes(win, tables, ep[lanes], eq[lanes], end[lanes],
+                                  merge=stamp, record=recs[-1][1])
+        last_round[lanes] = rnd
+        join[lanes] = np.where(hit, mp, np.iinfo(np.intp).max)
+        ndc[lanes] = mdc
+        xp[lanes] = np.where(hit, x0p[lanes], mp)
+        xq[lanes] = np.where(hit, x0q[lanes], mq)
+    else:
+        return _UNSYNCED
+
+    # Round-0 symbols from the joining bit on belong to the true path,
+    # after the lane's last decode.
+    ids0, p0, c0, kz0, v0 = (np.concatenate(col) for col in zip(*recs[0][1]))
+    recs[0][1].clear()
+    kept = p0 >= join.take(ids0)
+    del p0
+    skipped_dc = np.bincount(ids0[~kept & (kz0 == 0)], minlength=n)
+    tail_dc = np.where(join < np.iinfo(np.intp).max, n0 - skipped_dc, 0)
+    before = np.cumsum(ndc + tail_dc) - (ndc + tail_dc)
+    base = seg_base[lane_seg] + before - before[first][lane_seg]
+
+    # Where each segment's true path stops: its first lane that met an
+    # invalid code, else its last lane.
+    total_dc = ndc + tail_dc
+    bad = xq >= _LANE_BAD
+    stop = last.copy()
+    bad_lanes = np.flatnonzero(bad)
+    if len(bad_lanes):
+        s_bad, at = np.unique(lane_seg[bad_lanes], return_index=True)
+        stop[s_bad] = bad_lanes[at]
+    done = base[stop] - seg_base + total_dc[stop] - np.where(
+        bad[stop], xq[stop] == _ERR_AC, (xq[stop] & 63) != 0
+    )
+    short = done < need
+    if (short & bad[stop]).any():
+        return None
+    if short.any():
+        return _UNSYNCED
+    # a record's data unit is base + DC symbols so far - 1; units past
+    # the segment's need, and lanes past its stop, are not on the path
+    limit = np.where(np.arange(n) <= stop[lane_seg], (seg_base + need)[lane_seg], -1)
+    parts = []
+    for rnd, (lanes, rec) in enumerate(recs):
+        if rnd and not rec:
+            continue
+        if rnd:
+            ids, _, c, kz, v = (np.concatenate(col) for col in zip(*rec))
+            rec.clear()
+            ids = lanes.take(ids)
+            keep = last_round.take(ids) == rnd
+            blk = (base - 1).take(ids) + c
+        else:
+            ids, c, kz, v, keep = ids0, c0, kz0, v0, kept
+            blk = (base - 1 + ndc - skipped_dc).take(ids) + c
+        keep &= kz >= 0
+        keep &= blk < limit.take(ids)
+        parts.append((blk.compress(keep), kz.compress(keep), v.compress(keep)))
+        del ids, c, kz, v, keep, blk
+    ids0 = c0 = kz0 = v0 = kept = None  # free the records before joining
+    return tuple(np.concatenate(col) for col in zip(*parts))
+
+
+def _lane_bits(scan_bits: int, units: int) -> int:
+    """Bits per lane: about 8 data units' worth of the scan, at least
+    256. Lanes resynchronize mostly at block ends, so a lane must span a
+    few data units to rejoin within itself; shorter lanes mean fewer
+    lock-step steps per pass. Measured on 36 KB-1.7 MB photo scans at
+    q50-q100 (17-240 bits per unit): as fast as the best fixed length
+    within noise, and q100 scans synchronize in 12-14 rounds where fixed
+    256-bit lanes need more than _MAX_ROUNDS."""
+    return max(256, 8 * scan_bits // units // 64 * 64)
+
+
+def _walk_scalar(segs, need, seg_base, units):
+    """The per-symbol walk: the reference the lock-step walk must equal,
+    and its fallback. units: the (DC, AC) peek-16 LUTs of each data unit
+    of the MCU."""
+    n_unit = len(units)
+    tri_b: list[int] = []
+    tri_k: list[int] = []
+    tri_v: list[int] = []
+    for seg, n_blk, b0 in zip(segs, need.tolist(), seg_base.tolist()):
+        data, ld, pos, acc, nb = seg, len(seg), 0, 0, 0
+        for bi in range(b0, b0 + n_blk):
+            dc_lut, ac_lut = units[(bi - b0) % n_unit]
+            # --- DC ---
+            if nb < 16:
+                while nb <= 24:
+                    if pos < ld:
+                        acc = (acc << 8) | data[pos]
+                        pos += 1
+                    else:
+                        acc = (acc << 8) | 0xFF
+                    nb += 8
+            t = dc_lut[(acc >> (nb - 16)) & 0xFFFF]
+            if t < 0:
+                return None
+            nb -= t & 31
+            acc &= (1 << nb) - 1
+            s = t >> 5
+            diff = 0
+            if s:
+                if nb < s:
+                    while nb <= 24:
+                        if pos < ld:
+                            acc = (acc << 8) | data[pos]
+                            pos += 1
+                        else:
+                            acc = (acc << 8) | 0xFF
+                        nb += 8
+                v = (acc >> (nb - s)) & ((1 << s) - 1)
+                nb -= s
+                acc &= (1 << nb) - 1
+                diff = v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+            tri_b.append(bi)
+            tri_k.append(0)
+            tri_v.append(diff)
+            # --- AC ---
+            k = 1
+            while k < 64:
+                if nb < 16:
+                    while nb <= 24:
+                        if pos < ld:
+                            acc = (acc << 8) | data[pos]
+                            pos += 1
+                        else:
+                            acc = (acc << 8) | 0xFF
+                        nb += 8
+                t = ac_lut[(acc >> (nb - 16)) & 0xFFFF]
+                if t < 0:
+                    return None
+                nb -= t & 31
+                acc &= (1 << nb) - 1
+                rs = t >> 5
+                r, s = rs >> 4, rs & 15
+                if s == 0:
+                    if r == 15:  # ZRL
+                        k += 16
+                        continue
+                    break  # EOB
+                k += r
+                if k > 63:
+                    return None
+                if nb < s:
+                    while nb <= 24:
+                        if pos < ld:
+                            acc = (acc << 8) | data[pos]
+                            pos += 1
+                        else:
+                            acc = (acc << 8) | 0xFF
+                        nb += 8
+                v = (acc >> (nb - s)) & ((1 << s) - 1)
+                nb -= s
+                acc &= (1 << nb) - 1
+                tri_b.append(bi)
+                tri_k.append(k)
+                tri_v.append(v if v >= (1 << (s - 1)) else v - (1 << s) + 1)
+                k += 1
+    return (
+        np.array(tri_b, dtype=np.int64),
+        np.array(tri_k, dtype=np.int64),
+        np.array(tri_v, dtype=np.int64),
+    )
+
+
 def _decode_scan(frame, scomp, qt, huff, restart, segs) -> np.ndarray | None:
     w, h, comps = frame
     if len(scomp) != len(comps):
@@ -365,136 +793,68 @@ def _decode_scan(frame, scomp, qt, huff, restart, segs) -> np.ndarray | None:
     vmax = max(c[2] for c in comps)
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
-    # per-component coefficient grids in MCU-padded block units
-    grids = []
-    tables = []
     for (cid, hi, vi, tq), (scs, td, ta) in zip(comps, scomp):
         if scs != cid or tq not in qt or (0, td) not in huff or (1, ta) not in huff:
             return None
-        # int32 grids: baseline coefficients fit in 16 bits; int32
-        # halves the footprint of the naive int64 choice (bomb-cap math
-        # below assumes this)
-        grids.append(np.zeros((mcuy * vi, mcux * hi, 64), dtype=np.int32))
-        tables.append((huff[(0, td)], huff[(1, ta)], qt[tq]))
-
-    # Tight inlined entropy walk (r12, guide §1.2 per-task work): the
-    # method-call _BitReader/_decode_block shape spent ~70% of decode
-    # in Python call overhead (981k calls for a 648x490 photo). Here
-    # the bit reader lives in local variables, the peek-16 LUTs are
-    # plain lists, and coefficients accumulate as (block, k, value)
-    # triplets scattered into the int32 grids with ONE numpy assignment
-    # per component — behavior (including None on corrupt streams) is
-    # unchanged and pinned by the parity suite in tests/test_jpeg.py.
+    # The data units of one MCU in scan order: (component, block row
+    # and column within the component's part of the MCU).
+    units = [
+        (ci, by, bx)
+        for ci, (cid, hi, vi, tq) in enumerate(comps)
+        for by in range(vi)
+        for bx in range(hi)
+    ]
+    n_unit = len(units)
     n_mcu = mcux * mcuy
     per_seg = restart if restart else n_mcu
-    luts = [(t[0].tolist(), t[1].tolist()) for t in tables]
-    # flat (bi, k, v) triplets per component
-    tri_b: list[list[int]] = [[] for _ in comps]
-    tri_k: list[list[int]] = [[] for _ in comps]
-    tri_v: list[list[int]] = [[] for _ in comps]
-    comp_geo = [
-        (ci, hi, vi, mcux * hi) for ci, (cid, hi, vi, tq) in enumerate(comps)
-    ]
-    mcu = 0
-    for seg in segs:
-        if mcu >= n_mcu:
-            break
-        data, ld, pos, acc, nb = seg, len(seg), 0, 0, 0
-        preds = [0] * len(comps)
-        end = min(mcu + per_seg, n_mcu)
-        while mcu < end:
-            my, mx = divmod(mcu, mcux)
-            for ci, hi, vi, rowblocks in comp_geo:
-                dc_lut, ac_lut = luts[ci]
-                tb, tk, tv = tri_b[ci], tri_k[ci], tri_v[ci]
-                pred = preds[ci]
-                for by in range(vi):
-                    bi0 = (my * vi + by) * rowblocks + mx * hi
-                    for bx in range(hi):
-                        bi = bi0 + bx
-                        # --- DC ---
-                        if nb < 16:
-                            while nb <= 24:
-                                if pos < ld:
-                                    acc = (acc << 8) | data[pos]
-                                    pos += 1
-                                else:
-                                    acc = (acc << 8) | 0xFF
-                                nb += 8
-                        t = dc_lut[(acc >> (nb - 16)) & 0xFFFF]
-                        if t < 0:
-                            return None
-                        nb -= t & 31
-                        acc &= (1 << nb) - 1
-                        s = t >> 5
-                        if s:
-                            if nb < s:
-                                while nb <= 24:
-                                    if pos < ld:
-                                        acc = (acc << 8) | data[pos]
-                                        pos += 1
-                                    else:
-                                        acc = (acc << 8) | 0xFF
-                                    nb += 8
-                            v = (acc >> (nb - s)) & ((1 << s) - 1)
-                            nb -= s
-                            acc &= (1 << nb) - 1
-                            pred += v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-                        tb.append(bi)
-                        tk.append(0)
-                        tv.append(pred)
-                        # --- AC ---
-                        k = 1
-                        while k < 64:
-                            if nb < 16:
-                                while nb <= 24:
-                                    if pos < ld:
-                                        acc = (acc << 8) | data[pos]
-                                        pos += 1
-                                    else:
-                                        acc = (acc << 8) | 0xFF
-                                    nb += 8
-                            t = ac_lut[(acc >> (nb - 16)) & 0xFFFF]
-                            if t < 0:
-                                return None
-                            nb -= t & 31
-                            acc &= (1 << nb) - 1
-                            rs = t >> 5
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                return None
-                            if nb < s:
-                                while nb <= 24:
-                                    if pos < ld:
-                                        acc = (acc << 8) | data[pos]
-                                        pos += 1
-                                    else:
-                                        acc = (acc << 8) | 0xFF
-                                    nb += 8
-                            v = (acc >> (nb - s)) & ((1 << s) - 1)
-                            nb -= s
-                            acc &= (1 << nb) - 1
-                            tb.append(bi)
-                            tk.append(k)
-                            tv.append(v if v >= (1 << (s - 1)) else v - (1 << s) + 1)
-                            k += 1
-                preds[ci] = pred
-            mcu += 1
-    if mcu < n_mcu:
+    n_seg = -(-n_mcu // per_seg)
+    if len(segs) < n_seg:
         return None
+    seg_base = np.arange(n_seg, dtype=np.int64) * (per_seg * n_unit)
+    need = np.minimum(seg_base + per_seg * n_unit, n_mcu * n_unit) - seg_base
+    unit_tabs = [
+        (huff[(0, scomp[ci][1])], huff[(1, scomp[ci][2])]) for ci, _, _ in units
+    ]
+    coef = _entropy_decode(segs[:n_seg], need, seg_base, unit_tabs)
+    if coef is None:
+        return None
+    blk, kz, val = coef
+
+    # Per-component coefficient grids in MCU-padded block units, views
+    # of one flat int32 buffer (baseline coefficients fit in 16 bits;
+    # int32 halves the footprint of the naive int64 choice, and the
+    # bomb-cap math above assumes it). addr[mcu, unit] is the offset of
+    # that data unit's 64 coefficients in the buffer.
+    shapes = [(mcuy * vi, mcux * hi) for _, hi, vi, _ in comps]
+    offs = np.cumsum([0] + [by * bx * 64 for by, bx in shapes])
+    flat = np.zeros(int(offs[-1]), dtype=np.int32)
+    grids = [
+        flat[offs[ci] : offs[ci + 1]].reshape(by, bx, 64)
+        for ci, (by, bx) in enumerate(shapes)
+    ]
+    my, mx = np.divmod(np.arange(n_mcu, dtype=np.int64), mcux)
+    addr = np.empty((n_mcu, n_unit), dtype=np.int64)
+    for u, (ci, by, bx) in enumerate(units):
+        _, hi, vi, _ = comps[ci]
+        addr[:, u] = offs[ci] + ((my * vi + by) * (mcux * hi) + mx * hi + bx) * 64
+    flat[addr.ravel().take(blk) + kz] = val
+    # DC (overwriting the differences just written): every data unit
+    # carries its difference to the previous unit of the same component;
+    # predictions restart with each restart interval.
+    dc = kz == 0
+    diff = np.zeros(n_mcu * n_unit, dtype=np.int64)
+    diff[blk.compress(dc)] = val.compress(dc)
+    diff = diff.reshape(n_mcu, n_unit)
+    seg_of_mcu = np.arange(n_mcu) // per_seg
     for ci in range(len(comps)):
-        if tri_b[ci]:
-            grids[ci].reshape(-1, 64)[tri_b[ci], tri_k[ci]] = tri_v[ci]
+        cols = [u for u, unit in enumerate(units) if unit[0] == ci]
+        pred = np.cumsum(diff[:, cols].ravel()).reshape(n_mcu, len(cols))
+        prior = np.concatenate(([0], pred[per_seg - 1 :: per_seg, -1]))
+        flat[addr[:, cols]] = pred - prior[seg_of_mcu][:, None]
 
     planes = []
     for ci, (cid, hi, vi, tq) in enumerate(comps):
-        _, _, q = tables[ci]
+        q = qt[tq]
         grid = grids[ci]
         by, bx, _ = grid.shape
         n_blk = by * bx
@@ -649,29 +1009,20 @@ def _entropy_encode(coeffs: list[np.ndarray], tabs) -> bytes:
     """Vectorized baseline entropy coder: same symbol stream, same
     canonical codes, same MCU interleave, stuffing and 1-padding as the
     scalar _emit_block/_BitWriter path — byte-identical output (pinned
-    by tests), ~5x faster (the per-symbol Python loop was 80% of
-    jpeg_encode; guide §4.2 — the heavy lifting belongs in vectorized
-    native code inside the UDF).
+    by tests).
 
     Every Huffman item (codeword or appended value bits) becomes one
-    (code, nbits) pair with a (block, component, within-block) sort
-    key; one lexsort recovers exact stream order and a bit-position
-    scatter + packbits renders the stream."""
-    all_codes: list[np.ndarray] = []
-    all_lens: list[np.ndarray] = []
-    all_blk: list[np.ndarray] = []
-    all_comp: list[np.ndarray] = []
-    all_key: list[np.ndarray] = []
-
-    def _push(ci: int, blk: np.ndarray, key: np.ndarray, code: np.ndarray, ln: np.ndarray) -> None:
-        all_codes.append(code)
-        all_lens.append(ln)
-        all_blk.append(blk)
-        all_comp.append(np.full(len(blk), ci, dtype=np.int64))
-        all_key.append(key)
-
+    (code, nbits) pair placed at its stream index by construction: a
+    data unit's items start after all items of the units before it
+    (block-major, component-minor), and within a unit come the DC code,
+    the DC value bits, then per nonzero AC coefficient its ZRLs, symbol
+    and value bits, then EOB. The items are then packed into 32-bit
+    big-endian words."""
+    n = coeffs[0].shape[0]
+    ncomp = len(coeffs)
+    per_comp = []
+    counts = np.zeros((n, ncomp), dtype=np.int64)
     for ci, Z in enumerate(coeffs):
-        n = Z.shape[0]
         (dc_c, dc_l), (ac_c, ac_l) = tabs[ci]
         # --- DC: diff vs previous block of the SAME component ---
         dc = Z[:, 0].astype(np.int64)
@@ -679,62 +1030,70 @@ def _entropy_encode(coeffs: list[np.ndarray], tabs) -> bytes:
         s = _bit_length(diff)
         if int(s.max(initial=0)) >= len(dc_l) or (dc_l[s] == 0).any():
             raise ValueError("jpeg_encode: DC magnitude outside table")
-        blks = np.arange(n, dtype=np.int64)
-        _push(ci, blks, np.zeros(n, dtype=np.int64), dc_c[s], dc_l[s])
         has = s > 0
-        v = np.where(diff > 0, diff, diff + np.left_shift(np.int64(1), s) - 1)
-        _push(ci, blks[has], np.ones(int(has.sum()), dtype=np.int64), v[has], s[has])
+        dv = np.where(diff > 0, diff, diff + np.left_shift(np.int64(1), s) - 1)
         # --- AC: run-length over k = 1..last, ZRL for runs > 15 ---
-        acs = Z[:, 1:]
-        nzb, nzk0 = np.nonzero(acs)
-        if len(nzb):
-            k = nzk0.astype(np.int64) + 1
-            prev = np.concatenate(([np.int64(0)], k[:-1]))
-            same = np.concatenate(([False], nzb[1:] == nzb[:-1]))
-            run = k - np.where(same, prev, 0) - 1
-            zrl, rem = run // 16, run % 16
-            av = acs[nzb, nzk0].astype(np.int64)
-            sa = _bit_length(av)
-            sym = (rem << 4) | sa
-            if (ac_l[sym] == 0).any():
-                raise ValueError("jpeg_encode: AC symbol outside table")
-            # ZRL codes: j-th of a run sits just before its symbol
-            zt = int(zrl.sum())
-            if zt:
-                zi = np.repeat(np.arange(len(zrl)), zrl)
-                j = np.arange(zt, dtype=np.int64) - np.repeat(
-                    np.concatenate(([0], np.cumsum(zrl)[:-1])), zrl
-                )
-                _push(ci, nzb[zi].astype(np.int64), k[zi] * 64 + j,
-                      np.full(zt, ac_c[0xF0]), np.full(zt, ac_l[0xF0]))
-            _push(ci, nzb.astype(np.int64), k * 64 + 16, ac_c[sym], ac_l[sym])
-            va = np.where(av > 0, av, av + np.left_shift(np.int64(1), sa) - 1)
-            _push(ci, nzb.astype(np.int64), k * 64 + 17, va, sa)
-            last = np.zeros(n, dtype=np.int64)
-            last[nzb] = k  # ascending k per block: final write is the max
-        else:
-            last = np.zeros(n, dtype=np.int64)
-        eob = np.nonzero(last < 63)[0].astype(np.int64)
-        _push(ci, eob, np.full(len(eob), 64 * 64, dtype=np.int64),
-              np.full(len(eob), ac_c[0x00]), np.full(len(eob), ac_l[0x00]))
+        flat = Z.reshape(-1)
+        nz = (flat != 0).nonzero()[0]
+        nz = nz[(nz & 63) != 0]
+        nzb, k = nz >> 6, nz & 63
+        first = np.ones(len(nzb), dtype=bool)
+        first[1:] = nzb[1:] != nzb[:-1]
+        run = k - np.where(first, 0, np.concatenate(([0], k[:-1]))) - 1
+        zrl, rem = run // 16, run % 16
+        av = flat[nz].astype(np.int64)
+        sa = _bit_length(av)
+        sym = (rem << 4) | sa
+        if (ac_l[sym] == 0).any():
+            raise ValueError("jpeg_encode: AC symbol outside table")
+        va = np.where(av > 0, av, av + np.left_shift(np.int64(1), sa) - 1)
+        last = np.zeros(n, dtype=np.int64)
+        last[nzb] = k  # ascending k per block: final write is the max
+        eob = last < 63
+        # items per nonzero coefficient, and their offset within the unit
+        width = zrl + 2
+        excl = np.cumsum(width) - width
+        excl -= excl[first][np.cumsum(first) - 1]
+        counts[:, ci] = 1 + has + eob + np.bincount(nzb, weights=width, minlength=n).astype(np.int64)
+        per_comp.append((s, dv, has, nzb, excl + has[nzb], zrl, sym, va, sa, eob))
 
-    codes = np.concatenate(all_codes)
-    lens = np.concatenate(all_lens)
-    order = np.lexsort(
-        (np.concatenate(all_key), np.concatenate(all_comp), np.concatenate(all_blk))
-    )
-    codes, lens = codes[order], lens[order]
+    off = (np.cumsum(counts.ravel()) - counts.ravel()).reshape(n, ncomp)
+    total = int(counts.sum())
+    codes = np.empty(total, dtype=np.int64)
+    lens = np.empty(total, dtype=np.int64)
+    for ci, (s, dv, has, nzb, within, zrl, sym, va, sa, eob) in enumerate(per_comp):
+        (dc_c, dc_l), (ac_c, ac_l) = tabs[ci]
+        o = off[:, ci]
+        codes[o], lens[o] = dc_c[s], dc_l[s]
+        codes[o[has] + 1], lens[o[has] + 1] = dv[has], s[has]
+        at = o[nzb] + 1 + within  # first ZRL, else the symbol
+        zt = int(zrl.sum())
+        if zt:
+            zi = np.repeat(np.arange(len(zrl)), zrl)
+            j = np.arange(zt, dtype=np.int64) - (np.cumsum(zrl) - zrl)[zi]
+            codes[at[zi] + j], lens[at[zi] + j] = ac_c[0xF0], ac_l[0xF0]
+        at = at + zrl
+        codes[at], lens[at] = ac_c[sym], ac_l[sym]
+        codes[at + 1], lens[at + 1] = va, sa
+        e = o[eob] + counts[eob, ci] - 1
+        codes[e], lens[e] = ac_c[0x00], ac_l[0x00]
 
+    # Pack: item i's bits end at bit ends[i] of the stream. Shifted into
+    # the 64 bits of its 32-bit word and the next one it cannot overflow
+    # (offset < 32, length <= 16); items never overlap, so summing the
+    # parts per word ORs them (exact in float64: each word is < 2^32).
     ends = np.cumsum(lens)
+    nbits = int(ends[-1])
+    pad = (-nbits) % 8  # flush pads with 1s
     starts = ends - lens
-    total = int(ends[-1]) if len(ends) else 0
-    pad = (-total) % 8
-    bits = np.zeros(total + pad, dtype=np.uint8)
-    for bp in range(int(lens.max(initial=0))):
-        sel = lens > bp
-        bits[ends[sel] - 1 - bp] = (codes[sel] >> bp) & 1
-    bits[total:] = 1  # flush pads with 1s
-    by = np.packbits(bits)
+    word = starts >> 5
+    v = codes.astype(np.uint64) << (64 - (starts & 31) - lens).astype(np.uint64)
+    n_words = (nbits + pad + 31) // 32 + 1
+    words = np.bincount(word, weights=(v >> 32).astype(np.float64), minlength=n_words)
+    words[1:] += np.bincount(word, weights=(v & 0xFFFFFFFF).astype(np.float64), minlength=n_words)[:-1]
+    by = words.astype(np.uint32).astype(">u4").view(np.uint8)[: (nbits + pad) // 8].copy()
+    if pad:
+        by[-1] |= (1 << pad) - 1
     ff = np.nonzero(by == 0xFF)[0]
     if len(ff):
         by = np.insert(by, ff + 1, 0)  # byte stuffing

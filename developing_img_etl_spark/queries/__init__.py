@@ -72,6 +72,18 @@ _MODULES = (
 # these. Rotate next round: drop names once a CORRECTNESS artifact
 # shows them green, so the uncovered tail keeps surfacing.
 _DRIVER_PRIORITY = (
+    # Every consumer of the baseline JPEG decoder, whose entropy walk is
+    # now the lock-step walk (multimodal/jpeg.py), and the codec-compress
+    # queries whose last certification predates the vectorized codec.
+    "m1_image_compress",
+    "m12_bmp_compress",
+    "m14_png_compress",
+    "m18_jpeg_compress",
+    "m19_phash_dedup",
+    "m20_avi_frame_sample",
+    "m21_mov_frame_sample",
+    "m22_fmp4_frame_sample",
+    "m23_mkv_frame_sample",
     # r11 rotation: (a) queries NEW or REWORKED this round — q151
     # composition flagship, the q17/q23 hash-promotions (VERDICT r10
     # #6), the q147 top-K replan (ADVICE r10), the MKV unknown-size fix
@@ -88,7 +100,6 @@ _DRIVER_PRIORITY = (
     "q17_approx_distinct",
     "q23_approx_percentiles",
     "q147_chi2_token_lang",
-    "m23_mkv_frame_sample",
     "st15_streaming_lsh_dedup",
     "st13_streaming_hll_registers",
     "st16_streaming_cms_counts",

@@ -21,6 +21,14 @@ ensure_protobuf()
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def pytest_configure(config):
+    # Tests that need the reference pipeline's own photo snapshot (they
+    # skip without it); select or count them with `-m reference`.
+    config.addinivalue_line(
+        "markers", "reference: needs the reference pipeline's photo snapshot"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
